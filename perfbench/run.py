@@ -3,7 +3,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload ts_ingest --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload ts_scan --seed 1 --seconds 8 --trace 0
 
 Builds the library and the benchmark from source with sbt when the sources
 changed since the last build, then runs one workload in one JVM against

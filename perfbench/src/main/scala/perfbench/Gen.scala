@@ -53,24 +53,26 @@ final case class Series(seed: Long, rowsPerBatch: Int) {
   def userBytes(pos: Long): Long = 8 + 4 + 8 + payload(pos).length
 }
 
-/** A seeded synthetic corpus: documents of 40 to 90 space-separated
-  * tokens drawn with a skew towards frequent words from a fixed
-  * vocabulary. Distinct documents share almost no 3-word shingles, so
-  * every duplicate the screens find was planted. */
-final class Corpus(seed: Long, vocab: Int = 6000) {
+/** A seeded synthetic corpus in the shape of graft.Scaling's generator:
+  * documents of 40 to 80 space-separated words whose ranks are drawn
+  * with a quadratic skew (u², a light Zipf head) from a vocabulary of
+  * `vocab` words. Distinct documents share few 3-word shingles, so every
+  * duplicate the screens confirm was planted. */
+final class Corpus(seed: Long, vocab: Long) {
   private val rng = new java.util.SplittableRandom(seed * 0x9E3779B97F4A7C15L + 17L)
-  private def word(i: Int): String = "w" + Integer.toString(i, 36)
   private def token(): String = {
     val u = rng.nextDouble()
-    word((u * u * vocab).toInt)
+    "w" + (u * u * vocab).toLong
   }
-  def doc(minTokens: Int = 40, maxTokens: Int = 90): String =
-    Seq.fill(minTokens + rng.nextInt(maxTokens - minTokens + 1))(token()).mkString(" ")
+  def doc(): String = Seq.fill(40 + rng.nextInt(41))(token()).mkString(" ")
   /** A junk tail that no corpus document contains. */
   def junk(id: Long, n: Int): String = (1 to n).map(i => s"qq${id}x$i").mkString(" ")
 }
 
 object Corpus {
+  /** graft.Scaling's vocabulary size for a corpus of `n` documents. */
+  def vocabulary(n: Long): Long = math.max(2000L, (4.0 * math.pow(n.toDouble, 0.75)).toLong)
+
   def tokens(text: String): Array[String] = text.split(" ").filter(_.nonEmpty)
 
   /** The library's shingle hash (Dedup.baseHash32 over 3-word shingles),
@@ -90,9 +92,11 @@ object Corpus {
     i.toDouble / (a.size + b.size - i).toDouble
   }
 
+  /** (doc_id, text, source) with 20 sources, as Scaling's refresh
+    * families label theirs. */
   def docsFrame(spark: SparkSession, docs: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
-    docs.toDF("doc_id", "text")
+    docs.toDF("doc_id", "text").withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(20L))))
   }
 
   /** (doc_id, x) distinct shingle-hash rows, the GramIndex set shape. */

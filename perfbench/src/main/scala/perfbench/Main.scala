@@ -9,7 +9,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** One closed-loop operation as measured. */
-final case class OpRec(kind: String, ms: Double, items: Long, failures: Seq[String], extraMs: Double)
+final case class OpRec(kind: String, ms: Double, items: Long, failures: Seq[String])
 
 /** The timed operations of one phase, with the space amplification
   * sampled after each of them, and the untimed warm-up operations before
@@ -26,7 +26,7 @@ final case class Phase(ops: Seq[OpRec], spaceAmp: Seq[Double], gcMs: Seq[Double]
   * same length, set-up included in the trace. Writes one JSON report.
   *
   * Usage: Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *             --work <scratch dir> --out <report file> [--cores <k>] */
+  *             --work <scratch dir> --out <report file> --cores <k> */
 object Main {
   val SetupReps = 3
 
@@ -35,7 +35,7 @@ object Main {
     def need(k: String) = opt.getOrElse(k, { System.err.println(s"missing --$k"); sys.exit(2) })
     val (name, seed, seconds, trace) = (need("workload"), need("seed").toLong, need("seconds").toDouble, need("trace") == "1")
     val (work, out) = (need("work"), new File(need("out")))
-    val cores = opt.get("cores").map(_.toInt).getOrElse(math.min(4, Runtime.getRuntime.availableProcessors()))
+    val cores = need("cores").toInt
     out.delete()
 
     // stores live under data/, apart from the session's scratch space
@@ -113,15 +113,12 @@ object Main {
 
   /** One operation, its failures reported; exceptions count as failures. */
   private def run(wl: Workload, i: Int, tr: Tracer): OpRec = {
-    val before = tr.all.size
     val t0 = System.nanoTime()
     val r = try tr.span("op")(wl.op(i, tr))
       catch { case e: Exception => OpResult("error", 0, Seq(s"${e.getClass.getName}: ${e.getMessage}".take(500))) }
     val ms = (System.nanoTime() - t0) / 1e6
-    // work the traced run adds on top of the untraced operation
-    val extra = tr.all.drop(before).filter(_.name.startsWith("keys.")).map(_.ms).sum
     r.failures.foreach(f => System.err.println(s"[perfbench] op $i ${r.kind} FAILED: $f"))
-    OpRec(r.kind, ms, r.items, r.failures, extra)
+    OpRec(r.kind, ms, r.items, r.failures)
   }
 
   /** The closed loop: one client, the next operation starts when the

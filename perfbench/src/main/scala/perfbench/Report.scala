@@ -66,7 +66,7 @@ object Report {
       "end_to_end" -> e2e, "kinds" -> kinds, "op_ms" -> untraced.ops.map(o => math.rint(o.ms * 10) / 10))
     traced.foreach { case (p, tr, l) =>
       val layers = Layers.metrics(p, tr, l)
-      val overhead = median(p.ops.map(o => o.ms - o.extraMs)) / median(untraced.ops.map(_.ms)) - 1
+      val overhead = median(p.ops.map(_.ms)) / median(untraced.ops.map(_.ms)) - 1
       out("traced") = Map(
         "attempted" -> p.attempted, "failed" -> p.failed,
         "failures" -> (p.warmup ++ p.ops).flatMap(_.failures).take(10),
@@ -75,7 +75,9 @@ object Report {
       out("spans") = tr.all.map { s =>
         Map("id" -> s.id, "parent" -> s.parent, "op" -> s.op, "name" -> s.name,
           "start_ms" -> s.startMs, "end_ms" -> s.endMs, "dur_ms" -> s.ms, "counters" -> s.counters,
-          "work" -> l.get(s"span-${s.id}").map(Layers.workJson).getOrElse(Map.empty))
+          "work" -> Layers.workJson(l.get(s.group)),
+          "jobs" -> l.jobsOf(s.group).map(j => Map("description" -> j.description,
+            "start_ms" -> j.startMs, "end_ms" -> j.endMs)))
       }
     }
     Json(out.toMap)
@@ -86,24 +88,52 @@ object Report {
 object Layers {
   import Report.median
 
-  def workJson(w: GroupWork): Map[String, Any] = Map(
+  def workJson(w: JobWork): Map[String, Any] = Map(
     "jobs" -> w.jobs, "stages" -> w.stages, "tasks" -> w.tasks, "task_cpu_s" -> w.taskCpuNs / 1e9,
     "shuffle_mb" -> w.shuffleBytes / 1e6, "input_rows" -> w.inputRows)
+
+  /** One call into a layer: a span, or one stage of a span split by its
+    * `stages`. */
+  private final case class Call(name: String, ms: Double, selfMs: Double, work: JobWork, counters: Map[String, Double])
+
+  /** The stages of span `s`: consecutive jobs of one stage form a
+    * segment, which runs from its first job's start (the span's start for
+    * the first) to the next segment's first job start (the span's end for
+    * the last), less the time of the span's child spans. */
+  private def stageCalls(s: Span, st: PartialFunction[String, String], kids: Seq[Span], l: GroupListener): Seq[Call] = {
+    val js = l.jobsOf(s.group).flatMap(j => st.lift(j.description).map(_ -> j))
+    val segs = js.foldLeft(List.empty[(String, List[JobWork])]) {
+      case ((n, ws) :: rest, (m, j)) if n == m => (n, j :: ws) :: rest
+      case (acc, (m, j)) => (m, List(j)) :: acc
+    }.reverse
+    val bounds = segs.indices.map { i =>
+      val a = if (i == 0) s.startMs else segs(i)._2.map(_.startMs).min
+      val b = if (i == segs.size - 1) s.endMs else segs(i + 1)._2.map(_.startMs).min
+      val busy = covered(kids.map(k => (math.max(a, k.startMs), math.min(b, k.endMs))))
+      math.max(0.0, b - a - busy)
+    }
+    segs.zip(bounds).groupBy(_._1._1).toSeq.map { case (n, xs) =>
+      val ms = xs.map(_._2).sum
+      Call(n, ms, ms, JobWork.sum(xs.flatMap(_._1._2)), Map.empty)
+    }
+  }
 
   def metrics(p: Phase, tr: Tracer, l: GroupListener): Map[String, Double] = {
     val spans = tr.all
     val children = spans.groupBy(_.parent)
-    def work(s: Span) = l.get(s"span-${s.id}").getOrElse(new GroupWork)
-    def counter(ss: Seq[Span], k: String) = ss.map(_.counters.getOrElse(k, 0.0)).sum
+    val calls = spans.map { s =>
+      Call(s.name, s.ms, s.ms - children.getOrElse(s.id, Nil).map(_.ms).sum, l.get(s.group), s.counters)
+    } ++ spans.flatMap(s => s.stages.toSeq.flatMap(st => stageCalls(s, st, children.getOrElse(s.id, Nil), l)))
+    def counter(cs: Seq[Call], k: String) = cs.map(_.counters.getOrElse(k, 0.0)).sum
     def ratio(a: Double, b: Double) = if (b == 0) 0.0 else a / b
     val out = mutable.LinkedHashMap.empty[String, Double]
-    val byName = spans.groupBy(_.name)
-    byName.foreach { case (name, ss) =>
-      val n = ss.size.toDouble
-      val ws = ss.map(work)
+    val byName = calls.groupBy(_.name)
+    byName.foreach { case (name, cs) =>
+      val n = cs.size.toDouble
+      val ws = cs.map(_.work)
       out(s"$name.calls_per_op") = n / p.ops.size
-      out(s"$name.ms") = median(ss.map(_.ms))
-      out(s"$name.self_ms") = median(ss.map(s => s.ms - children.getOrElse(s.id, Nil).map(_.ms).sum))
+      out(s"$name.ms") = median(cs.map(_.ms))
+      out(s"$name.self_ms") = median(cs.map(_.selfMs))
       out(s"$name.jobs") = ws.map(_.jobs).sum / n
       out(s"$name.stages") = ws.map(_.stages).sum / n
       out(s"$name.tasks") = ws.map(_.tasks).sum / n
@@ -112,13 +142,14 @@ object Layers {
       out(s"$name.input_rows") = ws.map(_.inputRows).sum / n
     }
     def named(n: String) = byName.getOrElse(n, Nil)
-    def inputRows(n: String) = named(n).map(s => work(s).inputRows.toDouble).sum
+    def inputRows(n: String) = named(n).map(_.work.inputRows.toDouble).sum
     for (k <- Seq("keys.salt", "keys.unsalt"))
       out(s"$k.ns_per_row") = ratio(named(k).map(_.ms * 1e6).sum, counter(named(k), "rows"))
+    val write = named("store.salted_write")
     out("store.salted_write.bytes_written_per_user_byte") =
-      ratio(counter(named("store.salted_write"), "bytes_written"), counter(named("store.salted_write"), "user_bytes"))
+      ratio(counter(write, "bytes_written"), counter(write, "user_bytes"))
     out("store.salted_write.files_written") = {
-      val appends = named("store.salted_write").filter(_.counters.contains("files_written"))
+      val appends = write.filter(_.counters.contains("files_written"))
       ratio(counter(appends, "files_written"), appends.size)
     }
     out("scan.range.rows_read_per_row_returned") = ratio(inputRows("scan.range"), counter(named("scan.range"), "rows_returned"))
@@ -127,26 +158,25 @@ object Layers {
         case Seq() => 0.0
         case xs => median(xs)
       }
-    out("store.gram_probe.rows_read_per_contained") = ratio(inputRows("store.gram_probe"), counter(named("store.gram_probe"), "contained"))
-    out("store.band_probe.candidates_per_near_dup") =
-      ratio(counter(named("store.band_probe"), "candidates"), counter(named("pipeline.jaccard_verify"), "near_dup"))
+    out("store.gram_probe.rows_read_per_contained") = ratio(inputRows("store.gram_probe"), counter(named("op"), "contained"))
+    out("pipeline.fuzzy_screen.rows_read_per_near_dup") = ratio(inputRows("pipeline.fuzzy_screen"), counter(named("op"), "near_dup"))
 
     // driver orchestration, per operation
     val ops = spans.filter(_.name == "op")
     val byOp = spans.groupBy(_.op)
     val opWork = ops.map { o =>
-      val ws = byOp.getOrElse(o.id, Nil).map(work)
-      val busy = covered(ws.flatMap(_.jobIntervals).map { case (a, b) => (math.max(a, o.startMs), math.min(b, o.endMs)) })
-      (ws, math.max(0.0, o.ms - busy))
+      val ws = byOp.getOrElse(o.id, Nil).flatMap(s => l.jobsOf(s.group))
+      val busy = covered(ws.map(j => (math.max(j.startMs, o.startMs), math.min(j.endMs, o.endMs))))
+      (JobWork.sum(ws), math.max(0.0, o.ms - busy))
     }
-    def perOp(f: Seq[GroupWork] => Double) = ratio(opWork.map(w => f(w._1)).sum, ops.size)
-    out("driver.jobs_per_op") = perOp(_.map(_.jobs).sum.toDouble)
-    out("driver.tasks_per_op") = perOp(_.map(_.tasks).sum.toDouble)
+    def perOp(f: JobWork => Double) = ratio(opWork.map(w => f(w._1)).sum, ops.size)
+    out("driver.jobs_per_op") = perOp(_.jobs.toDouble)
+    out("driver.tasks_per_op") = perOp(_.tasks.toDouble)
     out("driver.gap_ms_per_op") = ratio(opWork.map(_._2).sum, ops.size)
-    out("driver.result_mb_per_op") = perOp(_.map(_.resultBytes).sum / 1e6)
-    out("driver.spill_mb_per_op") = perOp(_.map(_.spillBytes).sum / 1e6)
+    out("driver.result_mb_per_op") = perOp(_.resultBytes / 1e6)
+    out("driver.spill_mb_per_op") = perOp(_.spillBytes / 1e6)
     out("driver.gc_ms_per_op") = ratio(p.gcMs.sum, p.gcMs.size)
-    out("trace.unattributed_jobs") = l.get(GroupListener.NoGroup).map(_.jobs.toDouble).getOrElse(0.0)
+    out("trace.unattributed_jobs") = l.get(GroupListener.NoGroup).jobs.toDouble
     out.toMap
   }
 

@@ -5,18 +5,25 @@ import org.apache.spark.scheduler._
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** One timed call into a layer. Its Spark jobs ran under the job group
-  * `span-<id>`; `op` is the id of the operation it belongs to. */
+  * `span-<id>`; `op` is the id of the operation it belongs to. `stages`,
+  * when given, names the stage of each job by its description (set by
+  * the program's own `labeled` blocks); jobs it is not defined on belong
+  * to no stage. */
 final case class Span(id: Long, parent: Long, op: Long, name: String,
                       startNs: Long, endNs: Long, startMs: Long, endMs: Long,
-                      counters: Map[String, Double]) {
+                      counters: Map[String, Double], stages: Option[PartialFunction[String, String]]) {
   def ms: Double = (endNs - startNs) / 1e6
+  def group: String = s"span-$id"
 }
 
-/** Spark work of one job group, summed by [[GroupListener]]. */
-final class GroupWork {
-  var jobs = 0L
+/** Spark work of one job, or summed over several, as [[GroupListener]]
+  * saw it. */
+final class JobWork(val group: String, val description: String, val startMs: Long) {
+  var endMs: Long = startMs
+  var jobs = 1L
   var stages = 0L
   var tasks = 0L
   var taskCpuNs = 0L
@@ -24,53 +31,62 @@ final class GroupWork {
   var inputRows = 0L
   var resultBytes = 0L
   var spillBytes = 0L
-  /** (start, end) wall-clock ms of each finished job. */
-  val jobIntervals = mutable.ArrayBuffer.empty[(Long, Long)]
+
+  def +(o: JobWork): JobWork = {
+    val w = new JobWork(group, description, math.min(startMs, o.startMs))
+    w.endMs = math.max(endMs, o.endMs)
+    w.jobs = jobs + o.jobs; w.stages = stages + o.stages; w.tasks = tasks + o.tasks
+    w.taskCpuNs = taskCpuNs + o.taskCpuNs; w.shuffleBytes = shuffleBytes + o.shuffleBytes
+    w.inputRows = inputRows + o.inputRows; w.resultBytes = resultBytes + o.resultBytes
+    w.spillBytes = spillBytes + o.spillBytes
+    w
+  }
 }
 
-/** Attributes every job, stage and task to the job group that was set on
-  * the submitting thread. The benchmark gives each span its own group, so
-  * a group's totals are that span's Spark work. Listener events arrive
-  * asynchronously: call [[drain]] before reading totals. */
+object JobWork {
+  val Zero: JobWork = { val w = new JobWork("", "", 0L); w.jobs = 0; w }
+  def sum(ws: Iterable[JobWork]): JobWork = ws.foldLeft(Zero)(_ + _)
+}
+
+/** Records every job with the job group and description that were set on
+  * the submitting thread, and the stages and tasks it ran.
+  * The benchmark gives each span its own group, so a group's jobs are that
+  * span's Spark work. Listener events arrive asynchronously: call [[drain]]
+  * before reading. */
 final class GroupListener extends SparkListener {
-  private val stageGroup = new ConcurrentHashMap[Int, String]()
-  private val jobGroup = new ConcurrentHashMap[Int, (String, Long)]()
-  private val work = new ConcurrentHashMap[String, GroupWork]()
+  private val jobs = new ConcurrentHashMap[Int, JobWork]()
+  private val stageJob = new ConcurrentHashMap[Int, JobWork]()
   @volatile private var started = 0L
   @volatile private var ended = 0L
 
-  private def of(g: String): GroupWork = work.computeIfAbsent(g, _ => new GroupWork)
-
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    val g = Option(e.properties).flatMap(p => Option(p.getProperty(GroupListener.JobGroupKey)))
-      .getOrElse(GroupListener.NoGroup)
-    jobGroup.put(e.jobId, (g, e.time))
-    e.stageIds.foreach(s => stageGroup.putIfAbsent(s, g))
-    val w = of(g)
-    w.jobs += 1
+    def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+    val w = new JobWork(prop(GroupListener.JobGroupKey).getOrElse(GroupListener.NoGroup),
+      prop(GroupListener.DescriptionKey).getOrElse(""), e.time)
+    jobs.put(e.jobId, w)
+    e.stageIds.foreach(s => stageJob.putIfAbsent(s, w))
     started += 1
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-    Option(jobGroup.remove(e.jobId)).foreach { case (g, t0) => of(g).jobIntervals += ((t0, e.time)) }
+    Option(jobs.get(e.jobId)).foreach(_.endMs = e.time)
     ended += 1
   }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
-    val w = of(stageGroup.getOrDefault(e.stageInfo.stageId, GroupListener.NoGroup))
-    w.stages += 1
+    Option(stageJob.get(e.stageInfo.stageId)).foreach(_.stages += 1)
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    val g = stageGroup.getOrDefault(e.stageId, GroupListener.NoGroup)
-    val w = of(g)
-    w.tasks += 1
-    Option(e.taskMetrics).foreach { m =>
-      w.taskCpuNs += m.executorCpuTime
-      w.shuffleBytes += m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten
-      w.inputRows += m.inputMetrics.recordsRead
-      w.resultBytes += m.resultSize
-      w.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
+    Option(stageJob.get(e.stageId)).foreach { w =>
+      w.tasks += 1
+      Option(e.taskMetrics).foreach { m =>
+        w.taskCpuNs += m.executorCpuTime
+        w.shuffleBytes += m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten
+        w.inputRows += m.inputMetrics.recordsRead
+        w.resultBytes += m.resultSize
+        w.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
+      }
     }
   }
 
@@ -82,13 +98,19 @@ final class GroupListener extends SparkListener {
     Thread.sleep(200) // task and stage events of the last job trail its end event
   }
 
-  def get(group: String): Option[GroupWork] = Option(work.get(group))
+  /** The jobs of one group, in the order they started. */
+  def jobsOf(group: String): Seq[JobWork] = synchronized {
+    jobs.values.asScala.filter(_.group == group).toSeq.sortBy(_.startMs)
+  }
+
+  def get(group: String): JobWork = JobWork.sum(jobsOf(group))
 }
 
 object GroupListener {
   val NoGroup = "<none>"
-  /** The local property SparkContext.setJobGroup sets. */
+  /** The local properties SparkContext.setJobGroup and setJobDescription set. */
   val JobGroupKey = "spark.jobGroup.id"
+  val DescriptionKey = "spark.job.description"
 }
 
 /** Records spans around the benchmark's calls into each layer. Disabled,
@@ -105,8 +127,9 @@ final class Tracer(val enabled: Boolean, sc: => SparkContext) {
     if (id == 0L) sc.clearJobGroup() else sc.setJobGroup(s"span-$id", s"span-$id")
 
   /** Runs `body` as the span `name`. The outermost span of an operation
-    * starts a new operation id. */
-  def span[T](name: String)(body: => T): T =
+    * starts a new operation id. With `stages`, the span's jobs are also
+    * reported stage by stage. */
+  def span[T](name: String, stages: Option[PartialFunction[String, String]] = None)(body: => T): T =
     if (!enabled) body
     else {
       val id = nextId
@@ -122,7 +145,7 @@ final class Tracer(val enabled: Boolean, sc: => SparkContext) {
         val (t1, w1) = (System.nanoTime(), System.currentTimeMillis())
         stack = stack.tail
         setGroup(parent)
-        spans += Span(id, parent, currentOp, name, t0, t1, w0, w1, counters.toMap)
+        spans += Span(id, parent, currentOp, name, t0, t1, w0, w1, counters.toMap, stages)
       }
     }
 

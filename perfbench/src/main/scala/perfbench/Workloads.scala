@@ -1,9 +1,8 @@
 package perfbench
 
 import graft.keys.{HashPrefix, Salt}
-import graft.pipeline.Dedup
 import graft.scan.DistributedScan
-import graft.store.{BandIndex, GramIndex, SaltedStore}
+import graft.store.SaltedStore
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,17 +38,12 @@ abstract class Workload(val seed: Long, val work: String) {
   def sizes: Map[String, Any]
 
   protected def col(n: String) = org.apache.spark.sql.functions.col(n)
-  protected def pairsFrame(xs: Seq[(Long, Long)]): DataFrame = {
-    val s = spark
-    import s.implicits._
-    xs.toDF("a", "b")
-  }
 }
 
 object Workload {
   def apply(name: String, seed: Long, work: String): Workload = name match {
     case "ts_scan"        => new TsScan(seed, work)
-    case "corpus_refresh" => new CorpusRefresh(seed, work)
+    case "corpus_refresh" => new graft.perfbench.CorpusRefresh(seed, work)
     case other => throw new IllegalArgumentException(s"unknown workload '$other'")
   }
 
@@ -94,7 +88,7 @@ private object ScanCheck {
   * is a fixed cycle of operation kinds; the seed picks their keys. */
 final class TsScan(seed: Long, work: String) extends Workload(seed, work) {
   val RowsPerBatch = 20000
-  val Batches = 4L
+  val Batches = 5L
   val AppendedBatches = 2L
   val dist = HashPrefix(16)
   val Cycle: Vector[String] = Vector("range_narrow", "point_get_hit", "range_wide", "point_get_miss",
@@ -263,194 +257,4 @@ final class TsScan(seed: Long, work: String) extends Workload(seed, work) {
 
   def storeBytes: Long = Workload.diskBytes(path)
   def userBytes: Long = user
-}
-
-/** corpus_refresh: one increment per operation of planted exact copies,
-  * truncations, near-duplicate extensions, novel documents and
-  * tombstones, screened against persisted gram and band indexes, then
-  * applied to them. */
-final class CorpusRefresh(seed: Long, work: String) extends Workload(seed, work) {
-  val CorpusDocs = 600
-  val Copies = 8
-  val Truncations = 8
-  val Extensions = 8
-  val Novel = 16
-  val Tombstones = 4
-  val IndexShards = 4
-  private val gramPath = s"$work/gram"
-  private val bandPath = s"$work/band"
-  private var corpus: Corpus = _
-  private val live = mutable.LinkedHashMap.empty[Long, String]
-  private var hist: DataFrame = _
-  private var nextId = 0L
-
-  def sizes: Map[String, Any] = Map(
-    "corpus_docs" -> CorpusDocs, "warmup_ops" -> warmupOps, "op_group" -> opGroup, "tokens_per_doc" -> "40-90", "index_shards" -> IndexShards,
-    "increment" -> Map("copies" -> Copies, "truncations" -> Truncations, "extensions" -> Extensions,
-      "novel" -> Novel, "tombstones" -> Tombstones),
-    "compaction" -> "GramIndex/BandIndex.needsCompaction defaults (maxSegments 8), compact defaults",
-    "containment" -> "3/4", "jaccard" -> 0.5)
-
-  val warmupOps = 1
-  val opGroup = 2
-
-  def setup(s: SparkSession, tr: Tracer): Unit = {
-    spark = s
-    corpus = new Corpus(seed)
-    live.clear()
-    (0 until CorpusDocs).foreach(i => live(i.toLong) = corpus.doc())
-    nextId = CorpusDocs.toLong
-    val docs = Corpus.docsFrame(s, live.toSeq)
-    tr.span("store.gram_write")(GramIndex.write(Corpus.sets(docs), gramPath, IndexShards))
-    tr.span("store.band_write")(BandIndex.write(Dedup.docSketch(docs), bandPath, IndexShards))
-    hist = tr.span("pipeline.hist_update")(docs.select(col("doc_id"), md5(col("text")).as("h")).localCheckpoint())
-  }
-
-  private def pick(n: Int, avoid: Set[Long]): Seq[Long] = {
-    val ids = live.keys.toIndexedSeq
-    val out = mutable.LinkedHashSet.empty[Long]
-    while (out.size < n) {
-      val id = ids(rng.nextInt(ids.size))
-      if (!avoid(id)) out += id
-    }
-    out.toSeq
-  }
-
-  def op(i: Int, tr: Tracer): OpResult = {
-    // plant the increment
-    val tomb = pick(Tombstones, Set.empty)
-    val src = pick(Copies + Truncations + Extensions, tomb.toSet)
-    def fresh(): Long = { nextId += 1; nextId }
-    val copies = src.take(Copies).map(s => fresh() -> (s, live(s)))
-    val truncs = src.slice(Copies, Copies + Truncations).map { s =>
-      val w = Corpus.tokens(live(s)); fresh() -> (s, w.dropRight(2).mkString(" "))
-    }
-    val exts = src.drop(Copies + Truncations).map { s =>
-      val w = Corpus.tokens(live(s)); val id = fresh()
-      id -> (s, live(s) + " " + corpus.junk(id, (w.length - 2) / 3 + 1))
-    }
-    val novel = Seq.fill(Novel)(fresh() -> corpus.doc())
-    val incDocs = (copies ++ truncs ++ exts).map { case (id, (_, t)) => id -> t } ++ novel
-    val inc = Corpus.docsFrame(spark, incDocs).localCheckpoint()
-
-    // 1. exact screen: md5 against the live history
-    val exact: Map[Long, Long] = tr.span("pipeline.exact_screen") {
-      inc.select(col("doc_id").as("a"), md5(col("text")).as("h"))
-        .join(broadcast(hist.select(col("doc_id").as("b"), col("h"))), Seq("h"))
-        .groupBy("a").agg(min("b")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    val s1 = inc.filter(!col("doc_id").isin(exact.keys.toSeq: _*))
-    // 2. containment screen against the gram index
-    val contained: Seq[(Long, Long)] = tr.span("store.gram_probe") {
-      val pairs = GramIndex.probeContainment(spark, gramPath, Corpus.sets(s1))
-        .select("a", "b").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-      tr.count("contained", pairs.map(_._1).distinct.size.toDouble)
-      pairs
-    }
-    val containedIds = contained.map(_._1).toSet
-    val s2 = s1.filter(!col("doc_id").isin(containedIds.toSeq: _*))
-    // 3. near-duplicate screen: sketch, band probe, exact Jaccard verify
-    val sk = tr.span("pipeline.doc_sketch")(Dedup.docSketch(s2).localCheckpoint())
-    val cand: Seq[(Long, Long)] = tr.span("store.band_probe") {
-      val c = BandIndex.probeCandidates(spark, bandPath, Dedup.bandRows(sk, "doc_id"), "doc_id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-      tr.count("candidates", c.size.toDouble)
-      c
-    }
-    val nearDup: Seq[(Long, Long, Double)] = tr.span("pipeline.jaccard_verify") {
-      if (cand.isEmpty) Nil
-      else {
-        val v = BandIndex.sketchesForIds(spark, bandPath, cand.map(_._1).distinct)
-          .select(col("doc_id").as("a"), col("sh").as("sha"))
-          .join(broadcast(pairsFrame(cand)), Seq("a"))
-          .join(broadcast(sk.select(col("doc_id").as("b"), col("sh").as("shb"))), Seq("b"))
-          .select(col("b"), col("a"), Dedup.jaccardDistinct(col("sha"), col("shb")).as("j"))
-          .filter(col("j") >= 0.5)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-        tr.count("near_dup", v.size.toDouble)
-        v
-      }
-    }
-    val nearIds = nearDup.map(_._1).toSet
-    // 4. duplicate clusters over every confirmed pair
-    val edges = (exact.toSeq ++ contained ++ nearDup.map(t => t._1 -> t._2))
-      .map { case (x, y) => (math.min(x, y), math.max(x, y)) }.distinct
-    val labels: Map[Long, Long] = tr.span("pipeline.connected_components") {
-      if (edges.isEmpty) Map.empty[Long, Long]
-      else {
-        Dedup.connectedComponents(pairsFrame(edges)).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
-    }
-
-    // 5. apply: tombstones out, survivors in, compact by the indexes' policy
-    val inserted = incDocs.filterNot { case (id, _) => exact.contains(id) || containedIds(id) || nearIds(id) }
-    val insIds = inserted.map(_._1)
-    tr.span("store.gram_delete")(GramIndex.delete(spark, gramPath, tomb))
-    tr.span("store.band_delete")(BandIndex.delete(spark, bandPath, tomb))
-    if (inserted.nonEmpty) {
-      val insDocs = Corpus.docsFrame(spark, inserted)
-      tr.span("store.gram_append")(GramIndex.append(Corpus.sets(insDocs), gramPath))
-      tr.span("store.band_append")(BandIndex.append(sk.filter(col("doc_id").isin(insIds: _*)), bandPath))
-    }
-    tr.span("pipeline.hist_update") {
-      val old = hist
-      hist = hist.filter(!col("doc_id").isin(tomb: _*))
-        .union(Corpus.docsFrame(spark, inserted).select(col("doc_id"), md5(col("text")).as("h")))
-        .localCheckpoint()
-      old.unpersist()
-    }
-    if (GramIndex.needsCompaction(spark, gramPath))
-      tr.span("store.index_compact")(GramIndex.compact(spark, gramPath))
-    if (BandIndex.needsCompaction(spark, bandPath))
-      tr.span("store.index_compact")(BandIndex.compact(spark, bandPath))
-    inc.unpersist(); sk.unpersist()
-
-    val fails = check(copies, truncs, incDocs.toMap, novel.map(_._1).toSet, exact, contained, cand, nearDup, edges, labels)
-    tomb.foreach(live.remove)
-    inserted.foreach { case (id, t) => live(id) = t }
-    OpResult("refresh", incDocs.size, fails)
-  }
-
-  private def check(copies: Seq[(Long, (Long, String))], truncs: Seq[(Long, (Long, String))],
-                    incText: Map[Long, String], novel: Set[Long], exact: Map[Long, Long],
-                    contained: Seq[(Long, Long)], cand: Seq[(Long, Long)], nearDup: Seq[(Long, Long, Double)],
-                    edges: Seq[(Long, Long)], labels: Map[Long, Long]): Seq[String] = {
-    val fails = mutable.ArrayBuffer.empty[String]
-    copies.foreach { case (id, (_, text)) =>
-      exact.get(id) match {
-        case None => fails += s"exact copy $id was not flagged"
-        case Some(m) if !live.get(m).contains(text) => fails += s"exact copy $id matched $m, whose text differs"
-        case _ =>
-      }
-    }
-    val containedIds = contained.map(_._1).toSet
-    truncs.foreach { case (id, _) =>
-      if (!exact.contains(id) && !containedIds(id)) fails += s"truncation $id was not flagged"
-    }
-    contained.foreach { case (a, b) =>
-      val (sa, sb) = (Corpus.shingleSet(incText(a)), live.get(b).map(Corpus.shingleSet).getOrElse(Set.empty))
-      if (sa.isEmpty || 4 * (sa intersect sb).size < 3 * sa.size) fails += s"containment pair ($a, $b) is below 3/4"
-    }
-    // the verify must keep exactly the candidates whose Jaccard is at least 0.5
-    val want = cand.flatMap { case (a, b) =>
-      live.get(a).map(u => (b, a) -> Corpus.jaccard(Corpus.shingleSet(incText(b)), Corpus.shingleSet(u)))
-    }.filter(_._2 >= 0.5).toMap
-    val got = nearDup.map { case (b, a, j) => (b, a) -> j }.toMap
-    if (got.keySet != want.keySet) fails += s"Jaccard verify kept ${got.keySet.toSeq.sorted}, expected ${want.keySet.toSeq.sorted}"
-    got.foreach { case (k, j) => if (want.get(k).exists(w => math.abs(w - j) > 1e-9)) fails += s"near-dup pair $k at $j, expected ${want(k)}" }
-    val flagged = exact.keySet ++ containedIds ++ nearDup.map(_._1)
-    (flagged intersect novel).foreach(id => fails += s"novel doc $id was flagged")
-    // union-find over the same edges: every label must be its component's minimum
-    val parent = mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else { val r = find(p); parent(x) = r; r } }
-    edges.foreach { case (x, y) => val (rx, ry) = (find(x), find(y)); if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry) }
-    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    if (labels.size != nodes.size) fails += s"connected components labelled ${labels.size} nodes, expected ${nodes.size}"
-    nodes.foreach(n => if (!labels.get(n).contains(find(n))) fails += s"node $n labelled ${labels.get(n)}, expected ${find(n)}")
-    fails.take(5).toSeq
-  }
-
-  def storeBytes: Long = Workload.diskBytes(gramPath) + Workload.diskBytes(bandPath)
-  def userBytes: Long = live.valuesIterator.map(_.length.toLong).sum
 }

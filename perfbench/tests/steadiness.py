@@ -1,26 +1,25 @@
 #!/usr/bin/env python3
 """Steadiness self-check for the benchmark in BENCHMARK.json.
 
-Runs two sets of runs of the same code, each set one run per seed on every
-workload, and checks every end-to-end metric against its bound:
+Runs two sets of runs of the same code, each set one run per seed (1 to
+10) on every workload, and checks every end-to-end metric against its
+bound:
 
   * spread: the distance between the first and third quartile of a set's
     values (statistics.quantiles, n=4), as a share of their median, must
-    stay within the bound (setup_s is exempt: its bound limits drift
-    only, since its first set-up in a run carries the JVM's warm-up);
-  * drift: the second set's median must not be worse than the first's by
-    more than the bound.
+    stay within the bound;
+  * agreement: the two sets' medians must differ by no more than the
+    bound, as a share of the first set's median, in either direction.
 
 A graft.Calib.bracketAll sample is taken before and after each set and
 printed next to the figures as evidence of box contamination; it is not a
 metric. Run from the repository root:
 
-    python3 perfbench/tests/steadiness.py [--seeds 10] [--sets 2] [--workloads a,b]
+    python3 perfbench/tests/steadiness.py
 
 Exits 0 when every check holds, 1 otherwise. The full table is also
 written to .bench_build/perfbench/steadiness.json.
 """
-import argparse
 import json
 import os
 import statistics
@@ -30,6 +29,8 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 RUN = [sys.executable, os.path.join("perfbench", "run.py")]
+SEEDS = range(1, 11)
+SETS = 2
 
 
 def run(args):
@@ -50,20 +51,14 @@ def spread(values):
 
 def main():
     spec = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
-    ap = argparse.ArgumentParser(description="two sets of benchmark runs, checked against the bounds")
-    ap.add_argument("--seeds", type=int, default=10)
-    ap.add_argument("--sets", type=int, default=2)
-    ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--workloads", default=",".join(w["name"] for w in spec["workloads"]))
-    a = ap.parse_args()
-    workloads = a.workloads.split(",")
+    workloads = [w["name"] for w in spec["workloads"]]
     metrics = spec["end_to_end"]
     sets, brackets, ok = [], [], True
-    for s in range(a.sets):
+    for s in range(SETS):
         pre = calib()
         values = {w: {m["name"]: [] for m in metrics} for w in workloads}
         for w in workloads:
-            for seed in range(a.first_seed, a.first_seed + a.seeds):
+            for seed in SEEDS:
                 t0 = time.time()
                 rc, res = run(["--workload", w, "--seed", str(seed), "--seconds", str(spec["run_seconds"]), "--trace", "0"])
                 if rc != 0 or not res or not res["correct"]:
@@ -90,12 +85,12 @@ def main():
                     meds.append(statistics.median(v))
                     spreads.append(spread(v))
             line = {"workload": w, "metric": name, "bound": bound, "medians": meds, "spreads": spreads}
-            bad = [f"spread {x:.3f}" for x in spreads if name != "setup_s" and x > bound]
+            bad = [f"spread {x:.3f}" for x in spreads if x > bound]
             for prev, cur in zip(meds, meds[1:]):
-                worse = (cur - prev) / prev if m["better"] == "lower" else (prev - cur) / prev
-                line.setdefault("drifts", []).append(worse)
-                if worse > bound:
-                    bad.append(f"drift {worse:.3f}")
+                drift = (cur - prev) / prev
+                line.setdefault("drifts", []).append(drift)
+                if abs(drift) > bound:
+                    bad.append(f"drift {drift:+.3f}")
             line["ok"] = not bad
             ok &= not bad
             report.append(line)

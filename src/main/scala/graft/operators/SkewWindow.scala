@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   *   1. GLOBAL running aggregates over `ORDER BY (key ⧺ order)` — the
   *      range exchange spreads a hot key across MANY partitions, and
-  *      [[graft.plans.GlobalRunningAggStrategy]] plans the distributed
+  *      [[graft.plans.GlobalWindowStrategy]] (GlobalRunningAgg) plans the distributed
   *      prefix scan (no single task anywhere).
   *   2. Per-key totals (one partial+final hash agg — map-side combine
   *      bounds the hot key's final-task input to one buffer per map
@@ -74,7 +74,7 @@ object SkewWindow {
        "error across key boundaries)")
 
     // 1) global prefix scan over (keys ++ order): the hot key SPANS range
-    // partitions instead of pinning one task; GlobalRunningAggStrategy
+    // partitions instead of pinning one task; GlobalRunningAgg
     // plans the two-pass distributed prefix scan. One window node, three
     // running aggregates, one range exchange.
     val gw = Window.orderBy((keys ++ order).map(col): _*)
@@ -128,7 +128,7 @@ object SkewWindow {
     * of a key are CONTIGUOUS under the global (keys ⧺ order) sort, so
     * the global n-th neighbor IS the per-key one exactly when its key
     * matches — one rescued global offset window
-    * ([[graft.plans.GlobalOffsetWindowStrategy]]'s boundary-row stitch,
+    * ([[graft.plans.GlobalWindowStrategy]] (GlobalOffsetWindow)'s boundary-row stitch,
     * no hash exchange on the key, no per-key task) plus a null-safe
     * key-boundary guard. `exprs` maps output name → (input column,
     * offset — negative = lag, positive = lead, `default` when the
@@ -142,7 +142,7 @@ object SkewWindow {
     * frame clips to the key's running prefix, which [[runningExact]]
     * already computes. One `when()` on the per-key row number splices
     * the two; the global sliding scan
-    * ([[graft.plans.GlobalSlidingAggStrategy]]'s boundary stitch)
+    * ([[graft.plans.GlobalWindowStrategy]] (GlobalSlidingAgg)'s boundary stitch)
     * REUSES the same range exchange as the running scan. Appends
     * `sumName`, `cntName`, `avgName`; same exactness contract as
     * [[runningExact]] (avg is emitted as DECIMAL sum / count cast

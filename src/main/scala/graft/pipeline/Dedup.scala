@@ -667,7 +667,7 @@ object Dedup {
     val edgesWide = p.select(col("a").as("x"), col("b").as("y"))
       .union(p.select(col("b").as("x"), col("a").as("y")))
     // = edgesWide.count(), reading the pairs checkpoint once, not twice:
-    // the two symmetrized directions are disjoint by a<b construction
+    // `union` is UNION ALL, so edgesWide holds exactly two rows per pair
     val nEdges = 2L * p.count()
     // AQE is off for the loop (see connectedComponents), so size the loop
     // shuffles manually: the label/edge sets are typically orders of

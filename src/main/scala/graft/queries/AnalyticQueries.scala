@@ -43,7 +43,7 @@ object AnalyticQueries {
     * equi-join, all keyed on user_id so the shuffles align on one
     * partitioning; no window over events, no per-user sort. The 3-row
     * report's step-1 denominator rides the whole-frame constant window,
-    * which GlobalConstantAggStrategy plans as the zero-exchange
+    * which GlobalConstantAgg plans as the zero-exchange
     * constant spread (plan-pinned in queries/PlanShapeSpec). */
   private[queries] def funnelReport(ev: DataFrame,
                                     maxGapUs: Option[Long]): DataFrame = {
@@ -210,7 +210,7 @@ object AnalyticQueries {
     // UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)` with an explicit
     // total ORDER BY: each row carries its user's full event path in
     // event-time order. Rides the ordered constant-agg rescue
-    // (GlobalConstantAggStrategy.sortedCollect): range exchange over
+    // (the GlobalConstantAgg family's ordered collect_list): range exchange over
     // (user_id, ts_us, event_id), Collect partials APPEND under the
     // left-to-right edge merge, so the distributed list equals the
     // sorted sequential build — the last commonly-written window shape

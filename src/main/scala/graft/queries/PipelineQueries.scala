@@ -3280,7 +3280,7 @@ object PipelineQueries {
     }),
 
     // NAIVE global row_number, written as plain SQL — the query every
-    // untrained user writes. The GlobalRowNumberStrategy extension plans
+    // untrained user writes. The GlobalRowNumber extension plans
     // it as the two-pass range-shuffle + zipWithIndex exec instead of the
     // single-task WindowExec, so this exact SQL scales; the plan guard in
     // PlanShapeSpec asserts GlobalRowNumber is what actually runs. Order
@@ -3296,7 +3296,7 @@ object PipelineQueries {
     // q_rownum_global but with TIES (many events per user), which
     // row_number's two-pass rescue alone can't handle: rank needs the
     // tie-run start, dense_rank the distinct-key prefix count. The
-    // extended GlobalRowNumberStrategy computes both in the one
+    // extended GlobalRowNumber computes both in the one
     // per-partition stats pass — exact because the range exchange
     // co-locates equal sort keys, so tie runs never span partitions.
     // PlanShapeSpec asserts no single-task WindowExec survives.
@@ -3310,7 +3310,7 @@ object PipelineQueries {
 
     // NAIVE GLOBAL lag()/lead() — frameless OFFSET window functions,
     // the other half of the single-task global-window trap. The
-    // GlobalOffsetWindowStrategy plans a range shuffle + boundary-row
+    // GlobalOffsetWindow plans a range shuffle + boundary-row
     // stitch: each partition receives the max-lag tail of its
     // predecessors and max-lead head of its successors (a few rows,
     // independent of data size) and runs a constant-memory sliding
@@ -3346,7 +3346,7 @@ object PipelineQueries {
 
     // NAIVE GLOBAL RUNNING AGGREGATE — `SUM(x) OVER (ORDER BY ts)`, the
     // canonical cumulative total and the single most common global-
-    // window query. GlobalRunningAggStrategy plans the distributed
+    // window query. GlobalRunningAgg plans the distributed
     // prefix scan: per-partition partial buffers, driver prefix-merge
     // (#partitions buffer rows — constant), local running aggregation
     // seeded with the prefix. DECIMAL keeps the sum exact and order-
@@ -3364,7 +3364,7 @@ object PipelineQueries {
     }),
 
     // NAIVE GLOBAL MOVING AGGREGATE — `ROWS BETWEEN k PRECEDING AND
-    // CURRENT ROW`, the moving average. GlobalSlidingAggStrategy plans
+    // CURRENT ROW`, the moving average. GlobalSlidingAgg plans
     // the lag-style boundary stitch (each partition receives its max-k
     // predecessor rows) + per-row frame folds; each value is the same
     // sequential fold WindowExec performs, so even double arithmetic
@@ -3382,9 +3382,9 @@ object PipelineQueries {
     // CENTERED / LOOKAHEAD moving frames — `ROWS BETWEEN k PRECEDING
     // AND j FOLLOWING` (the smoothing window every time-series user
     // writes) and the pure-lookahead `CURRENT ROW AND j FOLLOWING`.
-    // GlobalSlidingAggStrategy stitches BOTH boundaries: each partition
+    // GlobalSlidingAgg stitches BOTH boundaries: each partition
     // receives its max-k predecessor tail and max-j successor head (the
-    // GlobalOffsetWindowExec stitch), then folds each row's frame from a
+    // GlobalOffsetWindow stitch), then folds each row's frame from a
     // trailing ring + lookahead queue — still one range exchange, still
     // bit-exact vs the built-in (same fold association).
     "q_moving_centered" -> ((s, dir) => {
@@ -3402,7 +3402,7 @@ object PipelineQueries {
     // RANGE-INTERVAL trailing window — `RANGE BETWEEN 1h PRECEDING AND
     // CURRENT ROW` over event time, THE time-series moving window. A
     // value-based frame can't ship a fixed row count across partition
-    // boundaries; GlobalRangeFrameStrategy ships each partition's
+    // boundaries; GlobalRangeFrame ships each partition's
     // leading edge the predecessor rows within the interval (bounded by
     // the frame's own row density) and folds tie runs locally —
     // peer-inclusive, exactly the built-in's RANGE semantics, without
@@ -3519,7 +3519,7 @@ object PipelineQueries {
     // SKEW-SAFE PER-KEY RANGE-INTERVAL FRAME — the per-user trailing
     // `INTERVAL 1 HOUR` window, THE per-entity time-series query, and
     // the last window family still exposed to the hot-key trap.
-    // GlobalRangeFrameStrategy now claims PARTITION BY nodes directly:
+    // GlobalRangeFrame now claims PARTITION BY nodes directly:
     // the exchange is a RANGE exchange over (user, ts) — a hot user
     // SPANS many tasks — and the boundary stitch clips shipped edge
     // windows at user boundaries (a key's rows are contiguous under
@@ -3587,7 +3587,7 @@ object PipelineQueries {
 
     // SKEW-SAFE PER-KEY RUNNING MIN/MAX — the one running family the
     // subtraction algebra could never cover (min/max have no inverse).
-    // GlobalRunningAggStrategy now claims PARTITION BY nodes directly:
+    // GlobalRunningAgg now claims PARTITION BY nodes directly:
     // a group-aware prefix scan over the (user, ts) RANGE exchange —
     // buffers reset at key boundaries, each task's first key seeded
     // from the driver-merged predecessor chain — so a hot user spans
@@ -3609,7 +3609,7 @@ object PipelineQueries {
     // (keep each user's 3 earliest events), plus ALL the per-key
     // ranking functions. Plain window SQL: the two specs (tie-free
     // arrival order; value order with peers) become two Window nodes,
-    // and GlobalRowNumberStrategy claims BOTH — each is a range
+    // and GlobalRowNumber claims BOTH — each is a range
     // exchange over (user, order) with counters reset at key
     // boundaries, each task's first key seeded from the driver's
     // edge-group chain, and the group totals percent_rank/cume_dist/
@@ -3635,7 +3635,7 @@ object PipelineQueries {
 
     // SKEW-SAFE PER-KEY CENTERED ROWS FRAME — smoothing with lookahead
     // (`ROWS BETWEEN 3 PRECEDING AND 2 FOLLOWING` per user), plain
-    // window SQL. GlobalSlidingAggStrategy claims the partitioned node:
+    // window SQL. GlobalSlidingAgg claims the partitioned node:
     // same-key rows are contiguous under the (user, ts) range exchange,
     // so each fold just CLIPS the global ring/lookahead at the key
     // boundary (one byte-equality per fold row). Exact DECIMAL sum
@@ -3655,7 +3655,7 @@ object PipelineQueries {
     // SKEW-SAFE SHARE-OF-GROUP-TOTAL — `x / SUM(x) OVER (PARTITION BY
     // user)`, the most common per-key window spelling of all. Stock
     // Spark hash-exchanges on user_id (hot user → one task);
-    // GlobalConstantAggStrategy plans a RANGE exchange over (user_id ⧺
+    // GlobalConstantAgg plans a RANGE exchange over (user_id ⧺
     // the aggregate's input) so the hot user spans tasks, ships only
     // EDGE-group partial buffers to the driver (two per task), merges
     // adjacent same-group partials into per-group constants, and
@@ -3728,7 +3728,7 @@ object PipelineQueries {
     // SKEW-SAFE PER-KEY GAP FILL — "previous non-null reading per
     // user": only purchase events carry a reading, so lag IGNORE NULLS
     // must skip arbitrarily long runs of other events. Plain window
-    // SQL; GlobalOffsetIgnoreNullsStrategy claims the PARTITION BY
+    // SQL; GlobalOffsetIgnoreNulls claims the PARTITION BY
     // node — the boundary job ships each task's edge-group non-null
     // VALUES (bounded by the offset, independent of null-run length),
     // the driver walks the task chain only while the edge group
@@ -3758,7 +3758,7 @@ object PipelineQueries {
     // sequence — the interval fan-out idea as a generator), left join,
     // zeros for counts and LOCF (last observation carried forward) for
     // values. LOCF is `last_value(x) IGNORE NULLS OVER (ORDER BY hour)`
-    // — a global running frame, planned by GlobalRunningAggStrategy
+    // — a global running frame, planned by GlobalRunningAgg
     // (Last rides the prefix scan; ignoreNulls preserved), never a
     // single task. At scale: the rollup is one hash agg over events;
     // the grid is bounded by the time span (10 years ≈ 88k rows —
@@ -3824,7 +3824,7 @@ object PipelineQueries {
     // NAIVE WHOLE-TABLE window aggregate — `SUM(x) OVER ()`, the
     // share-of-total query and the last common member of the global-
     // window family. Stock Spark funnels the entire table through one
-    // task; GlobalConstantAggStrategy plans per-partition partial
+    // task; GlobalConstantAgg plans per-partition partial
     // buffers + a driver merge + a narrow constant-attach pass — ZERO
     // exchanges (the plan guard asserts no SinglePartition shuffle).
     // DECIMAL keeps the total exact and order-insensitive; the share is
@@ -3842,7 +3842,7 @@ object PipelineQueries {
 
     // GLOBAL nth_value — the last window function to join the rescue.
     // Over any prefix frame the n-th frame row IS the global n-th row:
-    // GlobalNthValueStrategy collects bounded per-partition heads
+    // GlobalNthValue collects bounded per-partition heads
     // (≤ min(n, cap) values), the driver reads the ONE value the
     // function ever emits, and a narrow pass attaches it where the
     // frame reaches n — where the built-in funnels the table through a
@@ -3875,10 +3875,10 @@ object PipelineQueries {
     // "remaining total" mirror of the running aggregate, plus the
     // explicit whole-table frame WITH an order spec. Three window specs
     // → three Window nodes: the ROWS-suffix node and the RANGE-suffix
-    // node both plan GlobalRunningAggExec over the REVERSED sort order
+    // node both plan GlobalRunningAgg over the REVERSED sort order
     // (same prefix scan, enumerated backwards; first/last_value
     // swapped), and the UNBOUNDED..UNBOUNDED node plans
-    // GlobalConstantAggExec (an order spec can't change a whole-table
+    // GlobalConstantAgg (an order spec can't change a whole-table
     // frame). No single-task WindowExec anywhere (plan guard).
     "q_suffix_global" -> ((s, dir) => {
       events(s, dir).createOrReplaceTempView("events_v")
@@ -3901,11 +3901,10 @@ object PipelineQueries {
     // MIXED-FAMILY global window — running + suffix + rank + lag +
     // sliding over ONE order spec. The analyzer puts all five in a
     // SINGLE Window node (grouping is by (partition, order), not by
-    // frame), which no per-family strategy could claim whole; the
-    // GlobalWindowSplit optimizer rule splits it into five homogeneous
-    // nodes, each planning its rescue exec — adjacency no longer
-    // reopens the single-task trap (plan guard asserts all five execs,
-    // zero surviving WindowExec).
+    // frame); GlobalWindowStrategy plans the forward families as ONE
+    // GlobalWindowExec and the suffix frame as a second over the
+    // reversed order — adjacency never reopens the single-task trap
+    // (plan guard asserts every family, zero surviving WindowExec).
     "q_window_mixed_global" -> ((s, dir) => {
       events(s, dir).createOrReplaceTempView("events_v")
       s.sql("""SELECT event_id, user_id,

@@ -497,8 +497,9 @@ object GramIndex {
     // candBound ≤ maxCollect — `small` alone bounds prefix rows, not
     // candidates — and past either cap the localCheckpoint spelling is
     // unchanged.
+    val candSmall = small && candBound <= maxCollect
     val (cand, candShards) =
-      if (small && candBound <= maxCollect) {
+      if (candSmall) {
         val rows = candPlan
           .withColumn("bs", shardOf(col("b"), nShards))
           .collect()
@@ -521,7 +522,10 @@ object GramIndex {
       .getOrElse(profBase)
     val batchFull = sets.groupBy("a").agg(collect_list(col("x")).as("sha"))
     profs
-      .join(bc(cand), "b")
+      // the candidate side broadcasts only under the same bound as its
+      // collect: past it, `cand` is a local checkpoint of up to
+      // candBound rows and must not be shipped to every executor
+      .join(if (candSmall) broadcast(cand) else cand, "b")
       .join(bc(batchFull), "a")
       .withColumn("inter",
         size(array_intersect(col("sha"), col("shb"))).cast("bigint"))

@@ -121,7 +121,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: per-key range frame escaped the rescue:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected, s"per-key range frame diverged (round $round)")
         case 6 =>
           // per-key running aggregates via plain window SQL:
@@ -148,7 +148,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: built-in WindowExec survived:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected, s"per-key running agg diverged (round $round)")
         case 7 =>
           // per-key lag/lead via plain window SQL: the offset strategy
@@ -167,7 +167,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: built-in WindowExec survived:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected, s"per-key lag/lead($off) diverged (round $round)")
         case 8 =>
           // per-key ranking via plain window SQL — all SIX functions:
@@ -197,7 +197,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: built-in WindowExec survived:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected, s"per-key ranking diverged (round $round)")
         case 9 =>
           // per-key SLIDING frame via plain window SQL: the global
@@ -219,7 +219,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: built-in WindowExec survived:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected, s"per-key sliding($kp,$jf) diverged (round $round)")
         case 10 =>
           // per-key lag/lead IGNORE NULLS via plain window SQL: the
@@ -239,7 +239,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: built-in WindowExec survived:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected,
             s"per-key IGNORE NULLS lag($off1)/lead($off2) diverged (round $round)")
         case 11 =>
@@ -267,7 +267,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: built-in WindowExec survived:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected,
             s"per-key nth_value($n1)/IGNORE NULLS($n2) diverged (round $round)")
         case 12 =>
@@ -287,7 +287,7 @@ class SkewWindowFuzzSpec extends SparkSuite {
             s"round $round: built-in WindowExec survived:\n$p")
           val got = snap(out)
           val expected = withConf(
-            graft.plans.GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+            graft.plans.GlobalWindowStrategy.ConfKey, "false") { snap(out) }
           assert(got == expected, s"per-key group constants diverged (round $round)")
       }
     }

@@ -47,7 +47,7 @@ class GlobalConstantAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDecimal(5).toString, r.getDouble(6))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 
@@ -85,7 +85,7 @@ class GlobalConstantAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
     // order-SENSITIVE functions must NOT take the orderless constant
     // path: first_value is optimizer-rewritten to the rescued
@@ -144,7 +144,7 @@ class GlobalConstantAggSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected, "per-key group constants must match the built-in")
     // ORDER BY + explicit whole-group frame: spread = the order key
     keyed.createOrReplaceTempView("const_keyed")
@@ -154,14 +154,14 @@ class GlobalConstantAggSpec extends SparkSuite {
          FROM const_keyed""")
     assert(ordered.queryExecution.executedPlan.toString.contains("GlobalConstantAgg"))
     val og = snap(ordered)
-    val oe = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(ordered) }
+    val oe = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(ordered) }
     assert(og == oe)
     // COUNT(*) alone: no agg input, but any other child column spreads
     val countOnly = keyed.withColumn("c", count(lit(1)).over(Window.partitionBy("k")))
     assert(countOnly.queryExecution.executedPlan.toString.contains("GlobalConstantAgg"),
       "count(*) spreads on any orderable child column")
     val cGot = snap(countOnly)
-    val cExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(countOnly) }
+    val cExp = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(countOnly) }
     assert(cGot == cExp)
     // a table with NOTHING but the partition column has no spread
     // dimension at all: left to the built-in
@@ -198,7 +198,7 @@ class GlobalConstantAggSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected, "sketch windows must match the built-in bit-for-bit")
@@ -249,7 +249,7 @@ class GlobalConstantAggSpec extends SparkSuite {
       .select("id", "pk", "gl").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
     val got = snap(q)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(q) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(q) }
     assert(got == expected, "sorted collect_list must match the built-in exactly")
   }
 
@@ -271,7 +271,7 @@ class GlobalConstantAggSpec extends SparkSuite {
 
   test("opt-out restores the built-in plan") {
     val out = df.withColumn("t", sum("v").over(Window.partitionBy()))
-    withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    withConf(GlobalWindowStrategy.ConfKey, "false") {
       val p = out.queryExecution.executedPlan.toString
       assert(!p.contains("GlobalConstantAgg"))
       assert(p.contains("Window"), s"built-in WindowExec expected:\n$p")

@@ -48,7 +48,7 @@ class GlobalNthValueSpec extends SparkSuite {
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"single-task WindowExec must not survive for nth_value:\n$p")
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected)
@@ -65,7 +65,7 @@ class GlobalNthValueSpec extends SparkSuite {
     val out = spark.sql(q)
     assert(out.queryExecution.executedPlan.toString.contains("GlobalNthValue"))
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected)
@@ -81,7 +81,7 @@ class GlobalNthValueSpec extends SparkSuite {
         nth_value(k, 5) OVER (ORDER BY id) AS missing
       FROM nth_t3"""
     val got = snap(spark.sql(q))
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected)
@@ -98,7 +98,7 @@ class GlobalNthValueSpec extends SparkSuite {
     assert(mp.contains("GlobalNthValue") && mp.contains("GlobalRunningAgg"),
       s"mixed node must split into both rescue execs:\n$mp")
     val gotM = snap(mixed)
-    val expM = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(mixed) }
+    val expM = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(mixed) }
     assert(gotM == expM)
   }
 
@@ -124,7 +124,7 @@ class GlobalNthValueSpec extends SparkSuite {
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"single-task WindowExec must not survive:\n$p")
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected)
@@ -167,7 +167,7 @@ class GlobalNthValueSpec extends SparkSuite {
     // position 4 lands in — and hence the value — is deterministic
     // even though intra-run order is not
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected, "per-key prefix nth_value must match the built-in")
@@ -190,7 +190,7 @@ class GlobalNthValueSpec extends SparkSuite {
     assert(!fp.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec may appear:\n$fp")
     val fGot = snap(full)
-    val fExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val fExp = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(fullQ))
     }
     assert(fGot == fExp, "per-key whole-group frames must match the built-in")
@@ -213,12 +213,12 @@ class GlobalNthValueSpec extends SparkSuite {
         nth_value(v, 13) IGNORE NULLS OVER (ORDER BY k, id
           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS full13
       FROM nth_cap"""
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     // cap 0: pass 1 collects NO candidates — every present value must
     // come from the targeted second job, for all four families
-    withConf(GlobalNthValueStrategy.MaxNKey, "0") {
+    withConf(NthFamily.MaxNKey, "0") {
       val out = spark.sql(q)
       val p = out.queryExecution.executedPlan.toString
       assert(p.contains("GlobalNthValue"),

@@ -46,7 +46,7 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
         if (r.isNullAt(i)) null else r.get(i)).toList)
       .sortBy(_.head.asInstanceOf[Long])
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     val diffs = got.zip(expected).filter(p => p._1 != p._2).take(5)
@@ -109,7 +109,7 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
         if (r.isNullAt(i)) null else r.get(i)).toList)
       .sortBy(l => (l(0).asInstanceOf[Long], l(1).asInstanceOf[Long]))
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     val diffs = got.zip(expected).filter(p => p._1 != p._2).take(5)
@@ -138,7 +138,7 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2))))
       .sortBy(_._1).toSeq
     val got = snap(mixed)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(mixed) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(mixed) }
     assert(got == expected)
   }
 }

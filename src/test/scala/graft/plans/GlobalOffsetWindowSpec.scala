@@ -34,7 +34,7 @@ class GlobalOffsetWindowSpec extends SparkSuite {
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
     val got = collected(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       collected(out)
     }
     assert(got == expected)
@@ -85,7 +85,7 @@ class GlobalOffsetWindowSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got = snap(part)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(part) }
     assert(got == expected, "per-key lag/lead must match the built-in")
   }
 
@@ -97,7 +97,7 @@ class GlobalOffsetWindowSpec extends SparkSuite {
     val expr = df.withColumn("lg", lag(col("id") * 2 + col("k"), 2).over(w))
     val got = expr.collect().map(r =>
       (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) Long.MinValue else r.getLong(2))).sorted
-    val exp = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val exp = withConf(GlobalWindowStrategy.ConfKey, "false") {
       expr.collect().map(r =>
         (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) Long.MinValue else r.getLong(2))).sorted
     }

@@ -40,7 +40,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected, "range frames must match the built-in exactly")
   }
 
@@ -68,7 +68,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
         r.getLong(1), r.getLong(2))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 
@@ -88,7 +88,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
     def snap(x: org.apache.spark.sql.DataFrame) = x
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected)
@@ -110,7 +110,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected, "centered range frames must match the built-in exactly")
   }
 
@@ -138,7 +138,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
         r.getLong(1), r.getLong(2))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 
@@ -173,7 +173,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected, "per-key range frames must match the built-in exactly")
   }
 
@@ -191,7 +191,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 
@@ -211,7 +211,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
     def snap(x: org.apache.spark.sql.DataFrame) = x
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected)
@@ -234,7 +234,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected, "DESC range frames must match the built-in exactly")
 
     val d2 = (0 until 2000).map { i =>
@@ -251,7 +251,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got2 = snap2(out2)
-    val expected2 = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap2(out2) }
+    val expected2 = withConf(GlobalWindowStrategy.ConfKey, "false") { snap2(out2) }
     assert(got2 == expected2, "per-key DESC range frames must match the built-in")
   }
 
@@ -273,7 +273,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
     def snap(x: org.apache.spark.sql.DataFrame) = x.select("days", "id", "rc")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snap(spark.sql(q))
     }
     assert(got == expected, "date range frames must match the built-in exactly")
@@ -354,7 +354,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val pGot = snapP(peers)
-    val pExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snapP(peers) }
+    val pExp = withConf(GlobalWindowStrategy.ConfKey, "false") { snapP(peers) }
     assert(pGot == pExp, "peers-only frames must match the built-in")
   }
 
@@ -450,14 +450,14 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val rGot = counts(rescued)
     // scoped conf off: ONLY the month node falls back to stock WindowExec
     val (sPlan, sGot) =
-      withConf(GlobalRangeFrameStrategy.MonthRescueKey, "false") {
+      withConf(RangeFamily.MonthRescueKey, "false") {
         val d = spark.sql(q)
         (d.queryExecution.executedPlan.toString, counts(d))
       }
     assert(!sPlan.contains("GlobalRangeFrame"),
       s"month frames must fall back under the parity conf:\n$sPlan")
     // ...bit-for-bit what the full kill switch produces
-    val stock = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val stock = withConf(GlobalWindowStrategy.ConfKey, "false") {
       counts(spark.sql(q))
     }
     assert(sGot == stock, "parity conf must restore stock results exactly")
@@ -468,7 +468,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
     assert(Seq(0, 1, 2, 3).forall(i => rGot(i) == sGot(i)),
       s"non-boundary rows must agree: rescued=$rGot stock=$sGot")
     // non-month RANGE shapes KEEP the rescue under the scoped conf
-    withConf(GlobalRangeFrameStrategy.MonthRescueKey, "false") {
+    withConf(RangeFamily.MonthRescueKey, "false") {
       val day = spark.sql(
         """SELECT id, COUNT(*) OVER (ORDER BY ts
              RANGE BETWEEN INTERVAL 10 DAY PRECEDING AND CURRENT ROW) AS c
@@ -507,7 +507,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got = snapD(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snapD(spark.sql(q))
     }
     assert(got == expected, "decimal-key range frames must match the built-in")
@@ -519,7 +519,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val fine = spark.sql(fineQ)
     assert(fine.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
     val fGot = snapD(fine)
-    val fExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val fExp = withConf(GlobalWindowStrategy.ConfKey, "false") {
       snapD(spark.sql(fineQ))
     }
     assert(fGot == fExp, "coerced sub-scale bounds must match the built-in")

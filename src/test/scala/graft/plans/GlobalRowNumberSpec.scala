@@ -24,7 +24,7 @@ class GlobalRowNumberSpec extends SparkSuite {
   test("numbers match the built-in WindowExec on a unique order") {
     val naive = df.withColumn("rn", row_number().over(Window.orderBy("k", "id")))
     val got = naive.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       val p = naive.queryExecution.executedPlan.toString
       naive.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
     }
@@ -32,7 +32,7 @@ class GlobalRowNumberSpec extends SparkSuite {
   }
 
   test("falls back to WindowExec when disabled, and for partitioned/other windows") {
-    withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    withConf(GlobalWindowStrategy.ConfKey, "false") {
       val p = df.withColumn("rn", row_number().over(Window.orderBy("k", "id")))
         .queryExecution.executedPlan.toString
       assert(p.contains("Window "), s"disabled flag must restore WindowExec:\n$p")
@@ -53,7 +53,7 @@ class GlobalRowNumberSpec extends SparkSuite {
     // row_number ties: restrict the compare to the deterministic rank
     val cmp = partitioned.select("k", "id", "rk")
     val got = snap(cmp)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(cmp) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(cmp) }
     assert(got == expected, "per-key ranks must match the built-in")
     // group-total functions per key: buffered-group path + segment merge
     val ntilePart = df.withColumn("nt",
@@ -67,7 +67,7 @@ class GlobalRowNumberSpec extends SparkSuite {
       s"per-key ntile/percent_rank/cume_dist must rescue:\n$np")
     val ntCmp = ntilePart.select("k", "id", "nt", "pr", "cd")
     val ntGot = snap(ntCmp)
-    val ntExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(ntCmp) }
+    val ntExp = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(ntCmp) }
     assert(ntGot == ntExp, "per-key group-total ranks must match the built-in")
     // a mixed rank+lag node no longer opts the node out: GlobalWindowSplit
     // separates the families so each plans its own rescue exec
@@ -93,7 +93,7 @@ class GlobalRowNumberSpec extends SparkSuite {
     // rank/dense_rank are deterministic under ties; compare those exactly
     val got = out.select("k", "id", "rk", "drk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).sorted
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       out.select("k", "id", "rk", "drk")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).sorted
     }
@@ -115,7 +115,7 @@ class GlobalRowNumberSpec extends SparkSuite {
     val got = out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
       .sorted
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") {
       out.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
         .sorted

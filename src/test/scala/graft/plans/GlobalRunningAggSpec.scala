@@ -42,7 +42,7 @@ class GlobalRunningAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getDecimal(6).toString)).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 
@@ -59,7 +59,7 @@ class GlobalRunningAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
     // (k, id) is a unique order, so here ROWS == RANGE row-for-row
     assert(got.forall(t => t._3 == t._4))
@@ -76,7 +76,7 @@ class GlobalRunningAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
     // first_value over the default frame is the globally-first value
     val firstV = got.minBy(t => (t._1, t._2))._3
@@ -101,7 +101,7 @@ class GlobalRunningAggSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got = snap(part)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(part) }
     assert(got == expected, "per-key running aggs must match the built-in")
     // sliding frames are not a prefix scan
     val sliding = tied.withColumn("rs", sum("v").over(
@@ -131,7 +131,7 @@ class GlobalRunningAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
     // last row's remaining set is just itself
     val lastRow = got.maxBy(t => (t._1, t._2))
@@ -157,7 +157,7 @@ class GlobalRunningAggSpec extends SparkSuite {
       .sorted(Ordering.by((t: (Long, Long, Option[Any], Option[Any], Option[Any],
         Option[Any])) => (t._1, t._2))).toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
     // first_value of [current, end) is the current row's own value
     val byId = withNulls.select("k", "id", "vn").collect()
@@ -179,7 +179,7 @@ class GlobalRunningAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 

@@ -40,7 +40,7 @@ class GlobalSlidingAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getLong(4))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected, "moving aggregates must match the built-in exactly")
   }
 
@@ -82,7 +82,7 @@ class GlobalSlidingAggSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3), r.getDouble(4))).sorted.toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected, "centered/lookahead frames must match the built-in exactly")
   }
 
@@ -119,7 +119,7 @@ class GlobalSlidingAggSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val got = snap(part)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(part) }
     assert(got == expected, "per-key sliding frames must match the built-in")
   }
 }

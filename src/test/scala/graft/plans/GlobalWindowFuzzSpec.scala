@@ -141,7 +141,7 @@ class GlobalWindowFuzzSpec extends SparkSuite {
           Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
         .sorted.toSeq
       val got = snap(out)
-      val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+      val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
       assert(got == expected, s"round $round diverged from the built-in")
     }
   }

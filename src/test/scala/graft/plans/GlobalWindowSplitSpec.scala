@@ -44,7 +44,7 @@ class GlobalWindowSplitSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
         Option(r.get(4)))).sortBy(_._1).toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 
@@ -69,7 +69,7 @@ class GlobalWindowSplitSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1),
         Option(r.get(2)).map(_.toString).getOrElse("null"))).sortBy(_._1).toSeq
     val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
+    val expected = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(out) }
     assert(got == expected)
   }
 
@@ -93,7 +93,7 @@ class GlobalWindowSplitSpec extends SparkSuite {
         Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
       .sorted.toSeq
     val gotP = snap(part)
-    val expP = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
+    val expP = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(part) }
     assert(gotP == expP)
     // per-key whole-group last_value is now nth-rescuable: a mixed
     // running + whole-group node splits and BOTH rescue
@@ -105,7 +105,7 @@ class GlobalWindowSplitSpec extends SparkSuite {
     assert(lp.contains("GlobalRunningAgg") && lp.contains("GlobalNthValue"),
       s"running + per-key whole-group last_value must both rescue:\n$lp")
     val lGot = snap(lastPart)
-    val lExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(lastPart) }
+    val lExp = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(lastPart) }
     assert(lGot == lExp)
     // partitioned mixed node with a NON-capable family (nth_value past
     // the driver-head cap has no rescue): left whole — a partial split
@@ -122,7 +122,7 @@ class GlobalWindowSplitSpec extends SparkSuite {
 
   test("opt-out leaves mixed nodes unsplit") {
     tied.createOrReplaceTempView("gws_t3")
-    withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    withConf(GlobalWindowStrategy.ConfKey, "false") {
       val out = spark.sql(
         """SELECT SUM(v) OVER (ORDER BY k, id) AS a,
              rank() OVER (ORDER BY k, id) AS b FROM gws_t3""")

@@ -41,7 +41,7 @@ class WindowParityProbeSpec extends SparkSuite {
   private def checkParity(shapes: Seq[(String, String)]): Unit =
     shapes.foreach { case (name, q) =>
       val got = snap(q)
-      val exp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(q) }
+      val exp = withConf(GlobalWindowStrategy.ConfKey, "false") { snap(q) }
       assert(got == exp, s"$name diverged from the built-in:\n  $q\n" +
         s"  got-only=${got.diff(exp).take(3)}\n  exp-only=${exp.diff(got).take(3)}")
     }
@@ -120,7 +120,7 @@ class WindowParityProbeSpec extends SparkSuite {
         """SELECT id, SUM(v) OVER (PARTITION BY k ORDER BY ts
              RANGE BETWEEN INTERVAL '2' MONTH PRECEDING AND CURRENT ROW) AS s
            FROM wpp_t3""")
-    withConf(GlobalRangeFrameStrategy.MonthRescueKey, "false") {
+    withConf(RangeFamily.MonthRescueKey, "false") {
       checkParity(shapes)
       // and the month node really is on stock WindowExec under the conf
       val p = spark.sql(shapes.head._2).queryExecution.executedPlan.toString

@@ -221,6 +221,43 @@ class GramIndexSpec extends SparkSuite {
     assert(hintsSmall.nonEmpty, "ingest-sized plan lost its broadcast hints")
   }
 
+  test("a small batch with too many candidates does not broadcast the candidate frame") {
+    import spark.implicits._
+    val p = tmp("gramidx_candcap")
+    val corpus = (0L until 40L).map(i => (i, doc(i))).toDF("doc_id", "text")
+    GramIndex.write(setsOf(corpus), p)
+    val batch = (
+      (0L until 5L).map(i => (1000L + i,
+        doc(i).split(" ").dropRight(2).mkString(" "))) ++
+      (0L until 3L).map(i => (2000L + i, s"zulu$i yankee$i xray$i whiskey$i"))
+      ).toDF("doc_id", "text")
+    val unpinned = probe(p, batch)
+    assert(unpinned.nonEmpty)
+    // 46 set rows (so at most 46 prefix rows: the batch stays `small`),
+    // but each truncation's 3-row prefix reaches a shingle every corpus
+    // doc shares: 5 × (1 + 1 + 40) = 210 candidate rows, past the cap
+    val cap = 100L
+    assert(setsOf(batch).count() <= cap)
+    val key = GramIndex.MaxPrefixCollectKey
+    spark.conf.set(key, cap.toString)
+    try {
+      assert(probe(p, batch) === unpinned,
+        "capped-candidate plan diverged from the unpinned plan")
+      val analyzed = GramIndex.probeContainment(spark, p, setsOf(batch))
+        .queryExecution.analyzed
+      def checkpoints(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+        plan.collect { case r: org.apache.spark.sql.execution.LogicalRDD => r }
+      assert(checkpoints(analyzed).nonEmpty,
+        s"past the candidate cap the candidates must be checkpointed:\n$analyzed")
+      val hinted = analyzed.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }
+      assert(hinted.nonEmpty, "the small batch side lost its broadcast hints")
+      assert(hinted.forall(h => checkpoints(h.child).isEmpty),
+        s"the checkpointed candidate frame carries a broadcast hint:\n$analyzed")
+    } finally spark.conf.unset(key)
+  }
+
   test("write(overwrite) clears stale tombstones from the replaced generation") {
     import spark.implicits._
     val p = tmp("gramidx_staletomb")
